@@ -11,6 +11,7 @@ import json
 import sqlite3
 
 import pytest
+import yaml
 
 from tinyetl_spark.engine import transfer
 from tinyetl_spark.transforms import apply_inline, apply_script, compile_lua_file
@@ -231,6 +232,71 @@ def test_schema_file_quarantine_split(spark, tmp_path):
     good, bad = SchemaFile.from_file(str(sf)).split(df)
     assert sorted(r.event_id for r in good.collect()) == [1]
     assert bad.count() == 2
+
+
+MISMATCH_YAML = """
+columns:
+  - {name: id, type: integer}
+  - {name: qty, type: integer}
+  - {name: price, type: decimal}
+"""
+
+
+def _mismatch_df(spark):
+    """String columns as read raw from a CSV; row 2 holds text in the
+    integer column, row 3 in the decimal one. Spark 4 runs with ANSI
+    mode on, where a plain cast of 'abc' raises instead of giving NULL."""
+    return spark.createDataFrame(
+        [("1", "5", "1.5"), ("2", "abc", "2.5"), ("3", "7", "n/a")],
+        "id string, qty string, price string",
+    )
+
+
+def test_type_mismatch_filter_mode_drops_row(spark):
+    rules = SchemaFile.from_dict(yaml.safe_load(MISMATCH_YAML))
+    out = rules.apply(_mismatch_df(spark), on_violation="filter")
+    assert [tuple(r) for r in out.orderBy("id").collect()] == [(1, 5, 1.5)]
+
+
+def test_type_mismatch_quarantine_routes_row_to_bad(spark):
+    rules = SchemaFile.from_dict(yaml.safe_load(MISMATCH_YAML))
+    good, bad = rules.split(_mismatch_df(spark))
+    assert [tuple(r) for r in good.collect()] == [(1, 5, 1.5)]
+    assert sorted(r.id for r in bad.collect()) == ["2", "3"]
+
+
+def test_type_mismatch_error_mode_names_column(spark):
+    rules = SchemaFile.from_dict(yaml.safe_load(MISMATCH_YAML))
+    with pytest.raises(Exception, match="schema violation on column 'qty'.*value=abc"):
+        rules.apply(_mismatch_df(spark).filter("id = '2'")).collect()
+
+
+def test_declared_schema_csv_transfer_skips_inference(spark, tmp_path, monkeypatch):
+    """With a schema file the declared types drive the casts: no
+    inference sample job, and a string-declared "007" keeps its text
+    (inference would have read it as the integer 7)."""
+    from tinyetl_spark.io import files
+
+    def no_inference(*_a, **_k):
+        raise AssertionError("inference ran under a declared schema")
+
+    monkeypatch.setattr(files, "infer_from_string_df", no_inference)
+    src = tmp_path / "codes.csv"
+    src.write_text("code,n,at\n007,3,2024-01-02\n010,4,2024-01-03T08:30:00\n")
+    schema = tmp_path / "codes.yaml"
+    schema.write_text(
+        "columns:\n"
+        "  - {name: code, type: string}\n"
+        "  - {name: n, type: integer}\n"
+        "  - {name: at, type: datetime}\n"
+    )
+    out = str(tmp_path / "codes.parquet")
+    st = transfer(spark, str(src), out, schema_file=str(schema))
+    assert st.rows_transferred == 2
+    got = spark.read.parquet(out)
+    assert dict(got.dtypes) == {"code": "string", "n": "bigint", "at": "timestamp"}
+    rows = [(r.code, r.n, r.at.isoformat()) for r in got.orderBy("code").collect()]
+    assert rows == [("007", 3, "2024-01-02T00:00:00"), ("010", 4, "2024-01-03T08:30:00")]
 
 
 def test_boolean_string_coercion(spark):

@@ -194,7 +194,9 @@ def transfer(
     """Run one transfer. Returns stats; raises on config/validation errors."""
     t0 = time.perf_counter()
     src = parse_uri(source, format_hint=source_type, options=source_options)
-    df = read_source(spark, src)
+    # a declared schema drives the casts itself: read the source raw
+    # (no inference sample job, no second cast layer under validate)
+    df = read_source(spark, src, infer=not schema_file)
 
     if schema_file:
         from tinyetl_spark.validate import SchemaFile
@@ -246,9 +248,10 @@ def transfer(
             append = False  # missing, or exists-but-no-append → recreate
 
     if tgt.kind in ("sqlite", "duckdb", "avro", "odbc"):
-        # driver-side sinks stream toLocalIterator and count themselves;
-        # an Observation would never resolve for that execution shape.
-        # (avro may take the spark-native path and return None → count.)
+        # driver-side sinks stream Arrow batches partition by partition
+        # (io.arrow_stream) and count themselves; an Observation would
+        # never resolve for that execution shape. (avro may take the
+        # spark-native path and return None → count.)
         rows = write_target(df, tgt, append=append)
         if rows is None:
             rows = df.count()

@@ -5,9 +5,14 @@ reference drives it in-process behind a mutex (duckdb.rs:118-128), and
 the honest Spark equivalent is a DRIVER-side connector streaming
 bounded chunks (the duckdb Python module is in-container; there is no
 JDBC jar). Reads use DuckDB's Arrow fast path in record batches;
-writes stream ``toLocalIterator`` into a bulk INSERT via a registered
-Arrow view — the analogue of the reference's Appender API
-(duckdb.rs:16-76). For server-grade parallelism use the JDBC path.
+writes stream Arrow record batches one partition at a time
+(:mod:`tinyetl_spark.io.arrow_stream`) and insert each one whole
+through a registered Arrow view — the analogue of the reference's
+Appender API (duckdb.rs:16-76). Timestamps and dates arrive as ISO text
+and booleans as 0/1 (the shared driver-side projection); DuckDB's
+INSERT casts them to the TIMESTAMP/DATE/BOOLEAN columns, so a UTC
+instant is stored as UTC whatever DuckDB's own TimeZone setting is.
+For server-grade parallelism use the JDBC path.
 
 Parity:
 * schema via ``DESCRIBE`` (duckdb.rs:140-192)
@@ -97,12 +102,14 @@ def read_table(
 
 
 def write_table(
-    df: DataFrame, db_path: str, table: str, truncate: bool = False, batch_rows: int = 50_000
+    df: DataFrame, db_path: str, table: str, truncate: bool = False
 ) -> int:
-    """Append-first write with auto-DDL; bulk INSERT from Arrow batches
+    """Append-first write with auto-DDL; bulk INSERT of each Arrow batch
     (the Appender-equivalent fast path). Returns rows written."""
     import duckdb
-    import pandas as pd
+    import pyarrow as pa
+
+    from tinyetl_spark.io import arrow_stream
 
     os.makedirs(os.path.dirname(os.path.abspath(db_path)) or ".", exist_ok=True)
     ddl_cols = ", ".join(f'"{f.name}" {_duck_type(f.dataType)}' for f in df.schema.fields)
@@ -113,23 +120,11 @@ def write_table(
         if truncate:
             con.execute(f'DELETE FROM "{table}"')
         cols = ", ".join(f'"{c}"' for c in df.columns)
-        buf: list[tuple] = []
-
-        def flush(rows: list[tuple]) -> None:
-            if not rows:
-                return
-            pdf = pd.DataFrame(rows, columns=df.columns)
-            con.register("_tinyetl_batch", pdf)
+        for batch in arrow_stream.batches(arrow_stream.bindable(df)):
+            con.register("_tinyetl_batch", pa.Table.from_batches([batch]))
             con.execute(f'INSERT INTO "{table}" ({cols}) SELECT * FROM _tinyetl_batch')
             con.unregister("_tinyetl_batch")
-
-        for row in df.toLocalIterator(prefetchPartitions=True):
-            buf.append(tuple(row))
-            written += 1
-            if len(buf) >= batch_rows:
-                flush(buf)
-                buf = []
-        flush(buf)
+            written += batch.num_rows
     finally:
         con.close()
     return written

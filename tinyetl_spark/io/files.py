@@ -560,9 +560,12 @@ def write_avro(df: DataFrame, path: str, mode: str = "overwrite") -> int | None:
     except RuntimeError:
         raise
     except Exception:
-        from tinyetl_spark.io import avro_py
+        from tinyetl_spark.io import arrow_stream, avro_py
 
         fields = [(f.name, _avro_kind(f.dataType)) for f in df.schema.fields]
-        return avro_py.write_file(
-            path, fields, (tuple(r) for r in df.toLocalIterator(prefetchPartitions=True))
+        rows = (
+            row
+            for b in arrow_stream.batches(df)
+            for row in zip(*(c.to_pylist() for c in b.columns))
         )
+        return avro_py.write_file(path, fields, rows)

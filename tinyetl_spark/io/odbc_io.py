@@ -1,6 +1,8 @@
 """Generic ODBC source/sink via ``pyodbc`` (driver-side, bounded
 batches — the same deliberate shape as the SQLite/DuckDB embedded
-connectors).
+connectors: writes stream Arrow record batches one partition at a time
+through :mod:`tinyetl_spark.io.arrow_stream`, projected to bindable
+values — ISO-8601 text for date/datetime columns, 0/1 for BIT).
 
 Parity with the reference (src/connectors/odbc.rs):
 
@@ -31,10 +33,10 @@ drivers that have no JDBC equivalent).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from tinyetl_spark.io import arrow_stream
 
 MAX_ROWS_PER_INSERT = 100  # SQL Server caps at 1000 value sets; stay modest
 
@@ -156,17 +158,6 @@ def _insert_sql(table: str, cols: list[str], n_rows: int) -> str:
     return f"INSERT INTO [{table}] ({names}) VALUES {values}"
 
 
-def _chunks(it: Iterator, n: int) -> Iterator[list]:
-    buf: list = []
-    for x in it:
-        buf.append(x)
-        if len(buf) == n:
-            yield buf
-            buf = []
-    if buf:
-        yield buf
-
-
 def write_table(df: DataFrame, uri: str, truncate: bool = False) -> int:
     """Append-first with auto-DDL; one commit at the end (the
     reference's no-per-batch-transaction optimization, odbc.rs:430)."""
@@ -186,13 +177,14 @@ def write_table(df: DataFrame, uri: str, truncate: bool = False) -> int:
         elif truncate:
             cur.execute(f"DELETE FROM [{table}]")
         cols = df.columns
-        for chunk in _chunks(
-            (tuple(r) for r in df.toLocalIterator(prefetchPartitions=True)),
-            MAX_ROWS_PER_INSERT,
-        ):
-            flat = [v for row in chunk for v in row]
-            cur.execute(_insert_sql(table, cols, len(chunk)), flat)
-            n += len(chunk)
+        for batch in arrow_stream.batches(arrow_stream.bindable(df)):
+            rows = list(zip(*(c.to_pylist() for c in batch.columns)))
+            for lo in range(0, len(rows), MAX_ROWS_PER_INSERT):
+                chunk = rows[lo : lo + MAX_ROWS_PER_INSERT]
+                cur.execute(
+                    _insert_sql(table, cols, len(chunk)), [v for row in chunk for v in row]
+                )
+            n += len(rows)
         con.commit()
     except Exception:
         con.rollback()

@@ -4,16 +4,18 @@ There is no sqlite JDBC driver jar in this environment, and SQLite is a
 single-writer embedded database anyway — parallel executor writes would
 serialize on the file lock. So this connector is deliberately
 DRIVER-SIDE (SURVEY.md §7.4): reads stream in bounded chunks into Arrow
-→ Spark; writes stream ``toLocalIterator()`` batches into chunked
-multi-row INSERTs. Rows cross the driver in bounded batches, never all
-at once. For a server-grade parallel path use the JDBC connectors.
+→ Spark; writes stream Arrow record batches one partition at a time
+(:mod:`tinyetl_spark.io.arrow_stream`), already projected to bindable
+values on the executors, into ``executemany`` over each batch's column
+lists. Rows cross the driver in bounded batches, never all at once. For
+a server-grade parallel path use the JDBC connectors.
 
 Parity with the reference (src/connectors/sqlite.rs):
 * schema from ``PRAGMA table_info`` (sqlite.rs:76-101)
 * auto-DDL ``CREATE TABLE IF NOT EXISTS`` with the same type map
   (sqlite.rs:256-267): string→TEXT, integer→INTEGER, decimal→REAL,
   boolean→INTEGER, date/datetime→TEXT, json→TEXT
-* multi-row INSERT chunked to ≤900 bind variables (sqlite.rs:355-358)
+* datetimes stored as RFC 3339 text in UTC, booleans as 0/1
 * truncate = ``DELETE FROM`` (sqlite.rs:427-434); append supported
 """
 
@@ -21,12 +23,11 @@ from __future__ import annotations
 
 import os
 import sqlite3
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-MAX_BIND_VARS = 900
+from tinyetl_spark.io import arrow_stream
 
 _SPARK_TO_SQLITE = [
     (T.StringType, "TEXT"),
@@ -107,18 +108,6 @@ def read_table(
     return out
 
 
-def _to_bindable(value):
-    import datetime as dt
-
-    if isinstance(value, (dt.datetime,)):
-        return value.isoformat(sep="T") + "+00:00"  # RFC3339-ish, like TEXT dates
-    if isinstance(value, dt.date):
-        return value.isoformat()
-    if isinstance(value, bool):
-        return int(value)
-    return value
-
-
 def write_table(
     df: DataFrame,
     db_path: str,
@@ -127,42 +116,21 @@ def write_table(
 ) -> int:
     """Append-first write with auto-DDL; returns rows written."""
     os.makedirs(os.path.dirname(os.path.abspath(db_path)) or ".", exist_ok=True)
-    cols = df.columns
     ddl_cols = ", ".join(
         f'"{f.name}" {_sqlite_type(f.dataType)}' for f in df.schema.fields
     )
-    rows_per_stmt = max(1, MAX_BIND_VARS // max(1, len(cols)))
-    placeholders = "(" + ", ".join("?" for _ in cols) + ")"
+    names = ", ".join(f'"{c}"' for c in df.columns)
+    insert = f'INSERT INTO "{table}" ({names}) VALUES ({", ".join("?" for _ in df.columns)})'
     written = 0
     con = sqlite3.connect(db_path)
     try:
         con.execute(f'CREATE TABLE IF NOT EXISTS "{table}" ({ddl_cols})')
         if truncate:
             con.execute(f'DELETE FROM "{table}"')
-        buf: list[tuple] = []
-
-        def flush(batch: list[tuple]) -> None:
-            if not batch:
-                return
-            sql = (
-                f'INSERT INTO "{table}" ({", ".join(chr(34) + c + chr(34) for c in cols)}) '
-                f"VALUES {', '.join([placeholders] * len(batch))}"
-            )
-            con.execute(sql, [v for row in batch for v in row])
-
-        for row in _iter_rows(df):
-            buf.append(tuple(_to_bindable(v) for v in row))
-            written += 1
-            if len(buf) >= rows_per_stmt:
-                flush(buf)
-                buf = []
-        flush(buf)
+        for batch in arrow_stream.batches(arrow_stream.bindable(df)):
+            con.executemany(insert, zip(*(c.to_pylist() for c in batch.columns)))
+            written += batch.num_rows
         con.commit()
     finally:
         con.close()
     return written
-
-
-def _iter_rows(df: DataFrame) -> Iterator[tuple]:
-    for row in df.toLocalIterator(prefetchPartitions=True):
-        yield tuple(row)

@@ -98,16 +98,17 @@ def infer_from_string_df(df: DataFrame, sample_rows: int = SAMPLE_ROWS) -> list[
 def coercion_expr(col_name: str, data_type: str) -> Column:
     """The distributed cast for one inferred/declared column.
 
-    Non-conforming values become NULL (try_cast semantics) — see module
-    docstring for why this differs from the reference's per-row types.
+    Non-conforming values become NULL (``try_cast``: under ANSI mode a
+    plain cast would fail the job instead) — see module docstring for
+    why this differs from the reference's per-row types.
     """
     c = F.col(col_name)
     if data_type == INTEGER:
-        return c.cast("bigint")
+        return c.try_cast("bigint")
     if data_type == DECIMAL:
         # the reference's Decimal is lossy to f64 at every file boundary
         # (src/schema.rs:29,394) — double matches observable behavior
-        return c.cast("double")
+        return c.try_cast("double")
     if data_type == BOOLEAN:
         return (
             F.when(c == "true", F.lit(True))

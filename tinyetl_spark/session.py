@@ -47,6 +47,15 @@ _DEFAULTS = {
     # reads TIMESTAMP_NTZ natively. Harmless where ignored — loaders
     # (queries._normalize_events_ts) map both shapes to µs timestamps.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # PySpark's DataFrame debugging captures the Python call site of
+    # every wrapped functions.* / Column call for error messages, at
+    # several extra py4j round trips per call (one declared-schema CSV →
+    # parquet transfer of 50k rows with a 4-assignment transform: 6,894
+    # → 2,054 py4j commands, counted with cProfile). Off, an analysis or
+    # runtime error no longer names the Python file:line of the
+    # DataFrame call that built the failing expression; the Spark error
+    # text itself is unchanged.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -89,7 +89,9 @@ class SchemaFile:
     # ---------------------------------------------------------- build
 
     def _coerced(self, df: DataFrame, rule: ColumnRule) -> Column:
-        """Cast toward the declared type (None where not representable)."""
+        """Cast toward the declared type (None where not representable:
+        ``try_cast``, because an ANSI ``cast`` would fail the job on the
+        first mismatch instead of flagging it as a violation)."""
         if rule.name not in df.columns:
             return F.lit(None).cast(_spark_type(rule.data_type))
         c = F.col(rule.name)
@@ -98,9 +100,9 @@ class SchemaFile:
         if dt == "string":
             return c.cast("string")
         if dt == "integer":
-            return c.cast("bigint")
+            return c.try_cast("bigint")
         if dt == "decimal":
-            return c.cast("double")
+            return c.try_cast("double")
         if dt == "boolean":
             if isinstance(src, T.StringType):
                 lowered = F.lower(c)
